@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE {"metric":"total",...} JSON line
   * (final stdout line, sized to fit the driver's ~2KB stdout tail:
@@ -18,35 +16,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // Cluster-side tuning hook: SPARK_GRAFT_SPARK_CONF="k=v;k=v"
-    // overlays session confs (e.g. advisory partition sizes for a real
-    // cluster) without touching the timing methodology; unset, the
-    // session is byte-identical to the historical bench contract.
-    sys.env.get("SPARK_GRAFT_SPARK_CONF").foreach {
-      _.split(";").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warm-up: JVM + parquet footer caches + codegen paths. Partial
-    // scale-up dirs carry only a table subset (documents-only,
-    // events-only): warm on the first present table.
-    val warm = Seq("lineitem", "documents", "events", "embeddings")
-      .find(t => new java.io.File(s"$sfDir/$t.parquet").exists())
-      .getOrElse(sys.error(s"no warmable table in $sfDir"))
-    if (warm == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$warm.parquet").count()
+    val spark = Sessions.local()
+    warmUp(spark, sfDir)
 
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -158,16 +129,33 @@ object Bench {
         .mkString("{", ",", "}")
       println(s"""{"metric":"chunk","part":${i + 1},"of":${chunks.size},"queries":$cq}""")
     }
-    val bySlow = results.sortBy(-_._2)
-    val budget = 1200 // chars for the queries map (whole line ≤ ~1.6KB)
-    val kept = new scala.collection.mutable.ArrayBuffer[String]
-    var used = 0
-    bySlow.foreach { case (k, v) =>
-      val frag = "\"" + k + f"""":$v%.3f"""
-      if (used + frag.length + 1 <= budget) { kept += frag; used += frag.length + 1 }
-    }
+    val kept = slowestPrefix(results, budget = 1200)
     val contract =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${kept.mkString("{", ",", "}")},"sf":"$sfDir","n_queries":${results.size},"omitted":${results.size - kept.size},"detail":"$outPath",$loadJson}"""
     println(contract)
+  }
+
+  /** Warm-up: JVM + parquet footer caches + codegen paths, so timed
+    * runs measure the queries, not the session bring-up. Partial
+    * scale-up dirs carry only a table subset (documents-only,
+    * events-only): warm on the first present table. */
+  def warmUp(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
+    val warm = Seq("lineitem", "documents", "events", "embeddings")
+      .find(t => new java.io.File(s"$sfDir/$t.parquet").exists())
+      .getOrElse(sys.error(s"no warmable table in $sfDir"))
+    if (warm == "events")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$sfDir/$warm.parquet").count()
+  }
+
+  /** The contract line's `"name":sec` fragments, slowest first, cut at
+    * the first fragment that would take the map past `budget` chars
+    * (the whole line stays ≤ ~1.6KB): an exact slowest-first prefix,
+    * so a short fast entry never jumps a slower one that did not fit. */
+  def slowestPrefix(results: Seq[(String, Double)], budget: Int): Seq[String] = {
+    val frags = results.sortBy(-_._2)
+      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
+    val used = frags.scanLeft(0)(_ + _.length + 1).tail
+    frags.zip(used).takeWhile(_._2 <= budget).map(_._1)
   }
 }

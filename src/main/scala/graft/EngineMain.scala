@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine._
 
 /** CLI entry for the SQL engine: executes `;`-separated statements
@@ -19,14 +17,7 @@ object EngineMain {
     val script =
       if (args.length > 1) args.drop(1).mkString(" ")
       else scala.io.Source.stdin.mkString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val engine = new GraftEngine(spark, warehouse)
     SqlText.splitTopLevel(script, ';').foreach { stmt =>
       println(s"graft> $stmt")

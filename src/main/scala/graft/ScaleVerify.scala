@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-
 /** Institutionalized 100× oracle spot-check — the manual sf10 DuckDB
   * replays of earlier rounds as ONE runMain: replays a fixed
   * family-representative battery subset against a ScaleGen scale-up
@@ -20,7 +17,8 @@ import java.nio.file.{Files, Paths}
   * incremental), events-sequence ops, mixture apportionment, and the
   * MinHash fidelity audit. TPC-H-joined and engine-statement entries
   * are excluded by construction (ScaleGen does not scale their
-  * tables); their scale evidence is ScaleProbe and the bench ratios.
+  * tables); their scale evidence is the bench ratios and the engine
+  * statement-surface rows in BENCH_NOTES.md.
   *
   * Usage: runMain graft.ScaleVerify [sfDir=/tmp/sf10] [outDir]
   *   SPARK_GRAFT_ONLY overrides the subset (comma-separated names).
@@ -47,63 +45,22 @@ object ScaleVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/tmp/sf10")
     val outDir = args.lift(1).getOrElse("/tmp/scale_vout")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = Sessions.local()
     val names = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(defaultSubset)
     val missing = names.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"unknown battery entries: $missing")
-    // the outDir is reusable across runs (mkdirs on an existing dir),
-    // so a query's STALE parquet from a previous run must never
-    // survive into this run's compare: delete each target up front,
-    // and drop failed queries from the oracle list so check.py can
-    // only ever hash what THIS run produced
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete(); ()
-    }
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val target = new java.io.File(s"$outDir/$name")
-      if (target.exists()) rmrf(target)
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(target.getPath)
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"scale_query":"$name","sec":$dt%.2f}""")
-      } catch { case e: Throwable =>
-        System.err.println(s"[scaleverify] $name failed: ${e.getMessage}")
-        failed += name
-        if (target.exists()) rmrf(target)
-      }
-      spark.catalog.clearCache()
-    }
-    // oracle SQL for the subset, Verify's escaping
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val okNames = names.filterNot(failed.contains)
-    val json = SparkEntry.oracleSql.filter(kv => okNames.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // a failed entry leaves an empty directory, so check.py can only
+    // ever hash what THIS run produced and counts the failure as FAIL
+    val failed = Verify.dump(spark, sfDir, outDir,
+      names.map(n => n -> SparkEntry.queries(n)),
+      (name, dt) => println(f"""{"scale_query":"$name","sec":$dt%.2f}"""))
+    Verify.writeOracle(outDir, names.contains)
     spark.stop()
+    if (failed.nonEmpty)
+      System.err.println(
+        s"[scaleverify] ${failed.length} FAILED: " + failed.mkString(","))
     // hash-compare via the local oracle replica when available; else
     // print the exact command so the record can be produced manually
     val checker = new java.io.File("scripts/check.py")
@@ -118,13 +75,8 @@ object ScaleVerify {
           s"(${e.getMessage}); run: python3 scripts/check.py $sfDir $outDir")
       }
     } else println(s"run: python3 scripts/check.py $sfDir $outDir")
-    // the compare above only covers queries that produced output this
-    // run; a Spark-phase failure is still a FAILED round-close record
-    if (failed.nonEmpty) {
-      System.err.println(
-        s"[scaleverify] ${failed.length} FAILED (excluded from compare): " +
-          failed.mkString(","))
-      sys.exit(2)
-    }
+    // a Spark-phase failure is a FAILED round-close record even when
+    // check.py could not run
+    if (failed.nonEmpty) sys.exit(2)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.GraftEngine
 import graft.wire.MysqlServer
 
@@ -19,14 +17,7 @@ object ServeMain {
   def main(args: Array[String]): Unit = {
     val warehouse = args.lift(0).getOrElse("/tmp/graft_warehouse")
     val port = args.lift(1).map(_.toInt).getOrElse(3307)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val engine = new GraftEngine(spark, warehouse)
     val server = new MysqlServer(engine, port)
     println(s"graft: serving MySQL protocol on port ${server.boundPort} " +

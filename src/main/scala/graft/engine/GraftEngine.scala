@@ -519,7 +519,8 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
 
   /** Count of individual info-schema table writes since engine start
     * — observability for the transaction-batched catalog flush
-    * (ScaleProbe's O(1)-writes-per-transaction evidence). */
+    * (one write per transaction: EngineSpec "txn: catalog writes defer
+    * to COMMIT"; the 16-UPDATE numbers are in BENCH_NOTES.md). */
   private[graft] var infoWriteCount: Long = 0L
 
   private def registerInfoTables(names: Seq[String] = infoTables): Unit =

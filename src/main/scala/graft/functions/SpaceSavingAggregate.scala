@@ -16,7 +16,8 @@ import org.apache.spark.sql.types._
   * 2-slot long array per counter (count mutates in place — zero
   * allocation per repeat id). Eviction, merge floors, overflow trim
   * and (count desc, id asc) ranking replicate
-  * [[graft.operators.TopK.SpaceSavingAgg]] exactly — the spec pins
+  * the typed-Aggregator reference (`TopKReference.SpaceSavingAgg` in
+  * the test sources) exactly — the spec pins
   * the two byte-equal on random streams and merge splits.
   */
 final class SpaceSavingBuffer(val k: Int, val capacity: Int) {

@@ -317,8 +317,12 @@ case class L2Normalize(child: Expression)
   // containsNull follows the input: a null element null-poisons the
   // HOF's sum-of-squares fold, making EVERY output element null — the
   // compute below replicates that instead of silently reading 0.0
-  override def dataType: DataType = ArrayType(DoubleType,
-    child.dataType.asInstanceOf[ArrayType].containsNull)
+  // (matched, not cast: a non-array child must reach
+  // checkInputDataTypes' message, not a ClassCastException)
+  override def dataType: DataType = child.dataType match {
+    case ArrayType(_, containsNull) => ArrayType(DoubleType, containsNull)
+    case _ => ArrayType(DoubleType)
+  }
   override def prettyName: String = "graft_l2_normalize"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

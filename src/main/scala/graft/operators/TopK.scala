@@ -1,10 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Bounded top-k as a real aggregate, not a window.
@@ -12,7 +8,7 @@ import org.apache.spark.sql.functions._
   * `Window.partitionBy(q_id)` + `row_number` funnels the ENTIRE scored
   * candidate set into ≤|queries| tasks before discarding all but k rows
   * per query — at 100 TB that is a handful of tasks holding everything.
-  * A typed `Aggregator` instead rides Spark's two-phase aggregation:
+  * A bounded aggregate instead rides Spark's two-phase aggregation:
   * every map task reduces its slice to a ≤k-element buffer per key
   * (ObjectHashAggregate partial), and only those tiny buffers cross the
   * shuffle. The exchange carries O(partitions × keys × k) rows instead
@@ -20,70 +16,19 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
-  /** One scored candidate. `id` is the tie-breaker (ascending) for
-    * equal scores, which keeps results deterministic under any
-    * partitioning — the same total order `ORDER BY score DESC, id`
-    * a window formulation would use. */
-  case class Scored(id: Long, score: Double)
-
-  /** `better(x, y)` ⇔ x precedes y in the top-k order. Uses
-    * `java.lang.Double.compare` so NaN ordering matches Spark's and
-    * DuckDB's sort semantics (NaN sorts as the largest double). */
-  private def better(x: Scored, y: Scored): Boolean = {
-    val c = java.lang.Double.compare(x.score, y.score)
-    c > 0 || (c == 0 && x.id < y.id)
-  }
-
-  /** Keeps the k best `Scored` per group. The buffer is an unsorted
-    * ArrayBuffer culled back to k whenever it doubles — amortized O(1)
-    * per input row, no per-row allocation. */
-  class TopKAgg(k: Int)
-      extends Aggregator[Scored, ArrayBuffer[Scored], Seq[Scored]] {
-
-    private def cull(b: ArrayBuffer[Scored]): ArrayBuffer[Scored] =
-      if (b.length <= k) b
-      else {
-        val best = b.sortWith(better).take(k)
-        b.clear(); b ++= best
-      }
-
-    override def zero: ArrayBuffer[Scored] = ArrayBuffer.empty
-
-    override def reduce(b: ArrayBuffer[Scored], x: Scored): ArrayBuffer[Scored] = {
-      b += x
-      if (b.length >= 2 * k) cull(b) else b
-    }
-
-    override def merge(a: ArrayBuffer[Scored],
-        b: ArrayBuffer[Scored]): ArrayBuffer[Scored] = cull(a ++= b)
-
-    override def finish(b: ArrayBuffer[Scored]): Seq[Scored] =
-      b.sortWith(better).take(k).toSeq
-
-    // The buffer only serializes at the partial→final shuffle boundary
-    // (≤k elements), so an opaque binary encoding is fine.
-    override def bufferEncoder: Encoder[ArrayBuffer[Scored]] =
-      Encoders.kryo[ArrayBuffer[Scored]]
-    override def outputEncoder: Encoder[Seq[Scored]] =
-      ExpressionEncoder[Seq[Scored]]()
-  }
-
   /** Per-key top-k: `df.groupBy(keys).agg(topK(k)(id, score))` column.
-    * The result is an `array<struct<id,score>>` sorted best-first.
+    * The result is an `array<struct<id,score>>` sorted best-first;
+    * `id` is the tie-breaker (ascending) for equal scores, which keeps
+    * results deterministic under any partitioning — the same total
+    * order `ORDER BY score DESC, id` a window formulation would use.
     * Runs as a primitive-buffer TypedImperativeAggregate
     * ([[graft.functions.TopKAggregate]]): the typed-Aggregator udaf
     * paid an encoder round-trip (InternalRow → Scored case class) per
     * input row — measured ~3.7µs/row at sf0.1, the dominant per-row
     * cost of every scored candidate pass. Ordering and results are
-    * bit-identical (spec-pinned against [[TopKAgg]]). */
+    * bit-identical (spec-pinned against the udaf reference). */
   def topK(k: Int)(id: Column, score: Column): Column =
     graft.functions.TopKAggregate(id, score, k)
-
-  /** The pre-r17 typed-Aggregator formulation — kept as the
-    * spec-side reference implementation for the equality pin. */
-  def topKUdaf(k: Int)(id: Column, score: Column): Column =
-    udaf(new TopKAgg(k), Encoders.product[Scored])
-      .apply(id.cast("long"), score.cast("double"))
 
   /** Reduce `scored(groupCols..., idCol, scoreCol)` to the k best rows
     * per group, appending a 1-based `rnk`. Deterministic: ties in
@@ -101,11 +46,6 @@ object TopK {
         col("__n.score").as(scoreCol),
         (col("__pos") + 1).as(rnkCol)): _*)
   }
-
-  /** One space-saving heavy hitter: estimated count plus the maximum
-    * overestimation (`est_count - max_err` is a guaranteed lower
-    * bound on the true count). */
-  case class Hit(id: Long, count: Long, err: Long)
 
   /** Space-saving heavy hitters (Metwally, Agrawal & El Abbadi 2005,
     * "Efficient Computation of Frequent and Top-k Elements in Data
@@ -126,83 +66,19 @@ object TopK {
     * past capacity, counts overestimate by at most `err`. Eviction
     * and ranking tie-break (count desc, id asc) are deterministic,
     * but under overflow results legitimately depend on arrival
-    * order — the documented approximation, not an engine artifact. */
-  class SpaceSavingAgg(k: Int, capacity: Int) extends Aggregator[
-      Long, scala.collection.mutable.HashMap[Long, (Long, Long)], Seq[Hit]] {
-    require(0 < k && k <= capacity, s"need 0 < k <= capacity, got $k/$capacity")
-
-    override def zero: scala.collection.mutable.HashMap[Long, (Long, Long)] =
-      scala.collection.mutable.HashMap.empty
-
-    override def reduce(m: scala.collection.mutable.HashMap[Long, (Long, Long)],
-        id: Long): scala.collection.mutable.HashMap[Long, (Long, Long)] = {
-      m.get(id) match {
-        case Some((c, e)) => m(id) = (c + 1, e)
-        case None if m.size < capacity => m(id) = (1L, 0L)
-        case None =>
-          val (vid, (vc, _)) = m.minBy { case (i, (c, _)) => (c, i) }
-          m.remove(vid)
-          m(id) = (vc + 1, vc)
-      }
-      m
-    }
-
-    override def merge(a: scala.collection.mutable.HashMap[Long, (Long, Long)],
-        b: scala.collection.mutable.HashMap[Long, (Long, Long)])
-        : scala.collection.mutable.HashMap[Long, (Long, Long)] = {
-      // An id absent from a full summary may still have occurred up to
-      // that summary's minimum counter times (it could have been
-      // evicted at any point below the floor) — one-sided ids inherit
-      // the other side's floor as extra count AND extra error, which
-      // is what preserves `estimate >= true >= estimate - err` across
-      // merges (Agarwal et al. 2012, Mergeable Summaries).
-      def floor(m: scala.collection.mutable.HashMap[Long, (Long, Long)]): Long =
-        if (m.size < capacity) 0L else m.valuesIterator.map(_._1).min
-      val fa = floor(a)
-      val fb = floor(b)
-      val bOnly = b.filter { case (id, _) => !a.contains(id) }
-      a.mapValuesInPlace { case (id, (c, e)) =>
-        b.get(id) match {
-          case Some((c2, e2)) => (c + c2, e + e2)
-          case None => (c + fb, e + fb)
-        }
-      }
-      bOnly.foreach { case (id, (c, e)) => a(id) = (c + fa, e + fa) }
-      if (a.size > capacity) {
-        val keep = a.toSeq.sortBy { case (i, (c, _)) => (-c, i) }.take(capacity)
-        a.clear(); a ++= keep
-      }
-      a
-    }
-
-    override def finish(m: scala.collection.mutable.HashMap[Long, (Long, Long)])
-        : Seq[Hit] =
-      m.toSeq.sortBy { case (i, (c, _)) => (-c, i) }.take(k)
-        .map { case (i, (c, e)) => Hit(i, c, e) }
-
-    override def bufferEncoder
-        : Encoder[scala.collection.mutable.HashMap[Long, (Long, Long)]] =
-      Encoders.kryo[scala.collection.mutable.HashMap[Long, (Long, Long)]]
-    override def outputEncoder: Encoder[Seq[Hit]] =
-      ExpressionEncoder[Seq[Hit]]()
-  }
-
-  /** Per-group space-saving heavy hitters:
-    * `df.groupBy(keys).agg(spaceSaving(k, cap)(id))` — an
-    * `array<struct<id,count,err>>` ranked (count desc, id asc).
+    * order — the documented approximation, not an engine artifact.
+    *
+    * Per group: `df.groupBy(keys).agg(spaceSaving(k, cap)(id))` — an
+    * `array<struct<id,count,err>>` ranked (count desc, id asc): the
+    * estimated count plus the maximum overestimation (`count - err`
+    * is a guaranteed lower bound on the true count).
     * Runs as a primitive-buffer TypedImperativeAggregate
     * ([[graft.functions.SpaceSavingAggregate]]): the typed-Aggregator
     * udaf paid an encoder round-trip per input row (the ~3.7µs/row
     * class the TopK swap measured) plus a boxed tuple per increment.
     * Eviction, merge floors and ranking are identical (spec-pinned
-    * against [[SpaceSavingAgg]], including overflow + merge splits);
+    * against the udaf reference, including overflow + merge splits);
     * the same aggregate serves batch (q51) and streaming state (q61). */
   def spaceSaving(k: Int, capacity: Int)(id: Column): Column =
     graft.functions.SpaceSavingAggregate(id, k, capacity)
-
-  /** The pre-r18 typed-Aggregator formulation — kept as the
-    * spec-side reference implementation for the equality pin. */
-  def spaceSavingUdaf(k: Int, capacity: Int)(id: Column): Column =
-    udaf(new SpaceSavingAgg(k, capacity), Encoders.scalaLong)
-      .apply(id.cast("long"))
 }

@@ -37,7 +37,7 @@ object EventStreams {
   /** Per-window heavy hitters with bounded state — the streaming
     * shape of "top users per hour" on an unbounded stream. State per
     * window is one space-saving summary (O(capacity), see
-    * [[graft.operators.TopK.SpaceSavingAgg]]), NOT a counter per
+    * [[graft.operators.TopK.spaceSaving]]), NOT a counter per
     * distinct user, so the query's state store stays flat however
     * many ids flow through; the watermark expires whole windows.
     * Works identically on a batch DataFrame (the stream==batch spec

@@ -27,12 +27,7 @@ import graft.engine.{AffectedRows, GraftEngine, GraftException, GraftResult, Res
   */
 class EngineFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, overlay = None)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -16,12 +16,7 @@ import graft.engine._
   */
 class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, overlay = None)
 
   private def freshEngine(): GraftEngine = {
     val dir = Files.createTempDirectory("graft_wh_").toString

@@ -13,11 +13,7 @@ import graft.operators._
   */
 class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, overlay = None)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -1000,6 +996,14 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
           |  CAST(0 AS DOUBLE), (acc, w) -> acc + w)))""".stripMargin)
           .as("want"))
     assert(nn.filter(expr("to_json(got) != to_json(want)")).count() == 0L)
+    // a non-array input: dataType answers instead of throwing a
+    // ClassCastException, and analysis reports the type-check message
+    assert(graft.functions.L2Normalize(
+      org.apache.spark.sql.catalyst.expressions.Literal("x")).dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+    val bad = intercept[org.apache.spark.sql.AnalysisException](
+      Seq("x").toDF("s").select(graft.functions.L2Normalize(col("s"))))
+    assert(bad.getMessage.contains("requires array<double>"))
   }
 
   test("clusterTuned builder carries the documented 100-TB knobs") {

@@ -14,11 +14,7 @@ import graft.operators.Retrieval
   */
 class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, overlay = None)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -269,7 +265,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("q"), expr("to_json(t)").as("j"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       val want = df.groupBy("q")
-        .agg(graft.operators.TopK.topKUdaf(k)(col("id"), col("s")).as("t"))
+        .agg(graft.operators.TopKReference.topKUdaf(k)(col("id"), col("s")).as("t"))
         .select(col("q"), expr("to_json(t)").as("j"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       assert(got === want, s"k=$k diverges from the udaf reference")

@@ -18,12 +18,7 @@ import graft.streaming.EventStreams.Event
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, overlay = None)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -100,7 +95,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("space-saving state stays bounded and bounds its error under overflow") {
-    val agg = new graft.operators.TopK.SpaceSavingAgg(3, 4)
+    val agg = new graft.operators.TopKReference.SpaceSavingAgg(3, 4)
     // 100 distinct ids + a genuinely heavy id 7 (×50), capacity 4
     var m = agg.zero
     (0L until 100L).foreach { i => m = agg.reduce(m, i) }
@@ -120,7 +115,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("space-saving invariants hold on random streams and random merge splits") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    val agg = new graft.operators.TopK.SpaceSavingAgg(5, 8)
+    val agg = new graft.operators.TopKReference.SpaceSavingAgg(5, 8)
     // skewed random streams over a key space larger than capacity
     val stream: Gen[List[Long]] = Gen.listOfN(400,
       Gen.frequency(6 -> Gen.choose(0L, 3L), 4 -> Gen.choose(0L, 50L)))
@@ -153,7 +148,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // deterministic, unlike a through-Spark shuffle whose partial
     // fetch order is not pinned
     for ((k, cap) <- Seq((3, 4), (5, 8), (2, 16))) {
-      val agg = new graft.operators.TopK.SpaceSavingAgg(k, cap)
+      val agg = new graft.operators.TopKReference.SpaceSavingAgg(k, cap)
       val stream: Gen[List[Long]] = Gen.listOfN(400,
         Gen.frequency(6 -> Gen.choose(0L, 3L), 4 -> Gen.choose(0L, 50L)))
       (0 until 20).foreach { i =>
@@ -196,7 +191,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("g"), expr("to_json(hh)").as("j"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       val want = df.groupBy("g")
-        .agg(graft.operators.TopK.spaceSavingUdaf(k, cap)(col("id")).as("hh"))
+        .agg(graft.operators.TopKReference.spaceSavingUdaf(k, cap)(col("id")).as("hh"))
         .select(col("g"), expr("to_json(hh)").as("j"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       assert(got === want, s"k=$k cap=$cap diverges from the udaf reference")
